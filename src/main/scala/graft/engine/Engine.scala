@@ -42,39 +42,6 @@ object Engine
       Catalog.releaseAutoClaim(spark,
         m.group(1).stripPrefix("`").stripSuffix("`"))
     }
-    // a routed CREATE TABLE (never VIEW) or DROP TABLE retires any
-    // PRIMARY KEY registered for the name — but only AFTER the
-    // statement SUCCEEDS (a failed CREATE must not disarm the
-    // surviving table's constraint), and not for an IF NOT EXISTS
-    // no-op on an existing table (nothing was replaced). The plan is
-    // computed here, pre-execution, because the IF NOT EXISTS decision
-    // needs the BEFORE-state of the catalog; it applies below, after
-    // the dispatch returns without throwing. The per-name pkGen guard keeps a
-    // statement that itself registered a key (column-list CREATE with
-    // a PK clause, including via the TEMP TABLE / OR REPLACE
-    // recursions) from erasing its own registration.
-    val pkRetirePlan: Option[String] =
-      ddlCreateTableNameRe.findFirstMatchIn(trimmed) match {
-        case Some(m) =>
-          val name = pkName(spark, m.group(2))
-          if (m.group(1) != null && spark.catalog.tableExists(
-              m.group(2).stripPrefix("`").stripSuffix("`"))) None
-          else Some(name)
-        case None =>
-          dropTableNameRe.findFirstMatchIn(trimmed).map(m => pkName(spark, m.group(1)))
-      }
-    // per-name generation snapshot (ADVICE r20): retirement is vetoed
-    // only by a registration OF THIS NAME during the statement, never by
-    // a concurrent registration of an unrelated name
-    val pkGenBefore = pkRetirePlan.map(n => pkGenOf(spark, n))
-    def retirePkAfterSuccess(): Unit =
-      pkRetirePlan.foreach { name =>
-        if (pkGenBefore.contains(pkGenOf(spark, name))) {
-          val store = primaryKeys(spark)
-          store.synchronized { store.remove(name) }
-          ()
-        }
-      }
     // RETURNING (DuckDB/Postgres): a trailing clause on plain
     // INSERT/UPDATE/DELETE that yields the affected rows — split off
     // here so every DML route below stays RETURNING-free
@@ -86,7 +53,7 @@ object Engine
     val describeSelRe = "(?is)^DESCRIBE\\s+(SELECT\\b.+)$".r
     val describePathRe = "(?is)^DESCRIBE\\s+'([^']+)'$".r
     val describeFnRe = "(?is)^DESCRIBE\\s+(read_\\w+\\s*\\(.+\\))\\s*$".r
-    val routed = trimmed match {
+    trimmed match {
       case summarizeRe(target) => summarize(sqlTarget(spark, target))
       case describeSelRe(sel) => describe(sql(spark, sel))
       case describePathRe(path) =>
@@ -161,17 +128,12 @@ object Engine
         runAlterDropColumn(spark, table, ifExists != null, colName)
       case alterRenameColRe(table, oldName, newName) =>
         val out = runAlterRenameColumn(spark, table, oldName, newName)
-        // a renamed key column follows in the PK registry
-        locally {
-          val store = primaryKeys(spark)
-          store.synchronized {
-            store.get(pkName(spark, table)).foreach { keys =>
-              val o = oldName.stripPrefix("`").stripSuffix("`")
-              val n = newName.stripPrefix("`").stripSuffix("`")
-              store.update(pkName(spark, table),
-                keys.map(k => if (k.equalsIgnoreCase(o)) n else k))
-            }
-          }
+        // a renamed key column follows in the table's key property
+        pkOf(spark, table).foreach { keys =>
+          val o = oldName.stripPrefix("`").stripSuffix("`")
+          val n = newName.stripPrefix("`").stripSuffix("`")
+          spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES" +
+            s" (${pkTblProperty(keys.map(k => if (k.equalsIgnoreCase(o)) n else k))})")
         }
         out
       case prepareRe(name, text) =>
@@ -239,9 +201,9 @@ object Engine
         runUpsert(spark, table, body, keys, doUpdate)
       case insertOrRe(kind, table, body) =>
         // DuckDB's INSERT OR REPLACE/IGNORE shorthand resolves the key
-        // from the table's PRIMARY KEY — registered by the routed
-        // column-list CREATE TABLE since round 19 (a PK-less target
-        // still refuses, naming the explicit ON CONFLICT spelling)
+        // from the table's PRIMARY KEY property, written by the routed
+        // column-list CREATE TABLE (a PK-less target still refuses,
+        // naming the explicit ON CONFLICT spelling)
         runInsertOrShorthand(spark, kind, tableRef(spark, table), body)
       case insertHeadRe(table, body) if pkOf(spark, table).isDefined =>
         // plain INSERT into a PRIMARY-KEY'd table takes the ENFORCED
@@ -263,10 +225,8 @@ object Engine
       case pragmaTableInfoRe(t1, t2) =>
         // PRAGMA table_info('t') — DuckDB's column-introspection
         // one-liner, in DuckDB's EXACT output shape (cid, name, type,
-        // notnull, dflt_value, pk — r18): notnull is real schema
-        // metadata; dflt_value/pk are always NULL/false (no constraint
-        // metadata here). Driver-side metadata, no job.
-        tableInfo(spark.table(Option(t1).getOrElse(t2)))
+        // notnull, dflt_value, pk — r18). Driver-side metadata, no job.
+        tableInfo(spark, Option(t1).getOrElse(t2))
       case pragmaSettingRe() =>
         // assignment-shaped PRAGMAs (PRAGMA threads=4, PRAGMA
         // memory_limit='2GB', PRAGMA enable_progress_bar(false)) are
@@ -387,7 +347,8 @@ object Engine
         // non-transactional analog, with only a reader-visibility gap
         // between drop and rename). TEMPORARY VIEW replace is
         // Spark-native and never lands here (the regex requires TABLE
-        // right after REPLACE).
+        // right after REPLACE). A PRIMARY KEY declared by the replacement
+        // is a property of the build table, so it follows the rename.
         val tmp = s"${name}__graft_cor_tmp"
         spark.sql(s"DROP TABLE IF EXISTS $tmp")
         sql(spark, s"CREATE TABLE $tmp$rest")
@@ -401,59 +362,23 @@ object Engine
               s"CREATE OR REPLACE TABLE $name: swap failed after build —" +
                 s" new data is intact under $tmp", e)
         }
-        // a PRIMARY KEY declared in the replacement's column list was
-        // registered under the BUILD name by the recursive CREATE —
-        // follow the rename, so `CREATE OR REPLACE TABLE t (k …
-        // PRIMARY KEY)` enforces on t, not on a ghost. No key in the
-        // new definition → drop the replaced table's old entry (the
-        // registry never outlives the definition that declared it).
-        locally {
-          val store = primaryKeys(spark)
-          store.synchronized {
-            store.remove(pkName(spark, tmp)) match {
-              case Some(keys) =>
-                store.update(pkName(spark, name), keys)
-                bumpPkGen(spark, pkName(spark, name))
-              case None => store.remove(pkName(spark, name))
-            }
-          }
-          ()
-        }
         spark.emptyDataFrame
       case ddl if splitCreateCols(ddl).isDefined =>
         // plain column-list CREATE TABLE: DuckDB type names map to
         // Spark's (TEXT/bare VARCHAR → STRING, TIMESTAMPTZ → TIMESTAMP,
         // TYPE[] → ARRAY<TYPE>, …); NOT NULL / DEFAULT ride through.
-        // PRIMARY KEY (inline or table-level) is ACCEPTED since round
-        // 19: it registers in the session PK registry and every routed
-        // write path ENFORCES it (see EngineDml's PK block) — accepted
-        // *because* it is enforced. The remaining enforcement
+        // PRIMARY KEY (inline or table-level) is ACCEPTED: the same DDL
+        // stores it as the table's key property (`PkProperty`, see
+        // EngineDml's PK block) and every routed write path ENFORCES it
+        // — accepted *because* it is enforced. The remaining enforcement
         // constraints (UNIQUE / CHECK / REFERENCES) still REFUSE — the
         // CREATE UNIQUE INDEX precedent: silently dropping a constraint
         // the engine cannot enforce would let violations land without
         // a sound.
         val (prefix, cols, suffix) = splitCreateCols(ddl).get
         val (defs, pk) = extractPrimaryKey(cols)
-        // IF NOT EXISTS on an existing table is a catalog no-op — the
-        // surviving table's registration must not move either way
-        val ineNoop = ddlCreateTableNameRe.findFirstMatchIn(ddl).exists(m =>
-          m.group(1) != null && spark.catalog.tableExists(
-            m.group(2).stripPrefix("`").stripSuffix("`")))
-        val out =
-          spark.sql(s"$prefix(${defs.map(mapColumnDef).mkString(", ")})$suffix")
-        if (!ineNoop) ddlCreateNameRe.findFirstMatchIn(ddl).foreach { m =>
-          val store = primaryKeys(spark)
-          store.synchronized {
-            pk match {
-              case Some(keys) =>
-                store.update(pkName(spark, m.group(1)), keys)
-                bumpPkGen(spark, pkName(spark, m.group(1)))
-              case None => store.remove(pkName(spark, m.group(1)))
-            }
-          }
-          ()
-        }
-        out
+        spark.sql(s"$prefix(${defs.map(mapColumnDef).mkString(", ")})$suffix" +
+          pk.fold("")(keys => s" TBLPROPERTIES (${pkTblProperty(keys)})"))
       case ddl if splitDdlAs(ddl).isDefined =>
         // CREATE …VIEW/TABLE … AS <query>: the dialect rewrites apply to
         // the query BODY (a saved view definition legitimately carries
@@ -481,8 +406,6 @@ object Engine
       case _ =>
         spark.sql(rewriteQueryText(spark, trimmed))
     }
-    retirePkAfterSuccess()
-    routed
   }
 
   /** The full dialect-rewrite pipeline over ONE query's text — what the

@@ -774,7 +774,7 @@ private[engine] trait EngineDml {
         // land different rows than it returned), with columns absent
         // from an explicit column list NULL-filled to the target's
         // schema — DuckDB's subset-insert behavior, and RETURNING *
-        // sees the full landed row. A registered PRIMARY KEY enforces
+        // sees the full landed row. A declared PRIMARY KEY enforces
         // here exactly as on the plain insert route (the snapshot is
         // what gets checked AND what lands).
         //
@@ -785,19 +785,22 @@ private[engine] trait EngineDml {
         // it if it smuggles a non-deterministic or row-set-unstable
         // expression. Any source with a real relation leaf keeps the
         // eager checkpoint — `INSERT INTO t SELECT ... FROM t
-        // RETURNING *` would otherwise return post-insert rows.
+        // RETURNING *` would otherwise return post-insert rows. A
+        // subquery expression hides its relation from collectLeaves, so
+        // any plan carrying one is not literal-only either: `INSERT INTO
+        // t SELECT (SELECT max(k)+1 FROM t)` re-evaluated after the
+        // append would return a row that never landed.
         val landed = {
+          import org.apache.spark.sql.catalyst.expressions.PlanExpression
+          import org.apache.spark.sql.catalyst.plans.logical.{
+            LocalRelation, OneRowRelation, Range}
           val bound = boundInsertSource(spark, table, body)
-          val literalOnly = bound.queryExecution.analyzed
-            .collectLeaves().forall {
-              case _: org.apache.spark.sql.catalyst.plans.logical
-                .LocalRelation => true
-              case _: org.apache.spark.sql.catalyst.plans.logical
-                .OneRowRelation => true
-              case _: org.apache.spark.sql.catalyst.plans.logical
-                .Range => true
-              case _ => false
-            }
+          val plan = bound.queryExecution.analyzed
+          val literalOnly = plan.collectLeaves().forall {
+            case _: LocalRelation | _: OneRowRelation | _: Range => true
+            case _ => false
+          } && !plan.exists(_.expressions.exists(
+            _.exists(_.isInstanceOf[PlanExpression[_]])))
           if (literalOnly) stableSnapshot(bound)
           else bound.localCheckpoint(true)
         }
@@ -817,7 +820,7 @@ private[engine] trait EngineDml {
 
   // the table may be spelled bare, backquoted, or dot-qualified — a
   // narrower pattern would let `INSERT INTO \`t\`` fall through to the
-  // native append and silently bypass a registered PRIMARY KEY
+  // native append and silently bypass a declared PRIMARY KEY
   private[engine] val insertHeadRe =
     "(?is)^INSERT\\s+INTO\\s+(`[^`]+`|[A-Za-z_][\\w.]*)\\s*(.+)$".r
 
@@ -1100,57 +1103,39 @@ private[engine] trait EngineDml {
       .toDF("n_files", "n_rewritten")
   }
 
-  // --- PRIMARY KEY metadata + enforcement (round 19) ----------------------
+  // --- PRIMARY KEY metadata + enforcement ---------------------------------
   //
   // DuckDB's INSERT OR REPLACE/IGNORE shorthand resolves its conflict
-  // key from the table's PRIMARY KEY — metadata this engine previously
-  // refused to accept (and with it, the shorthand). The round-19 deal:
-  // the routed column-list CREATE TABLE records a declared PRIMARY KEY
-  // in a session registry, and every ROUTED write path then ENFORCES it
-  // (plain INSERT, COPY FROM, key-assigning UPDATE) exactly as DuckDB
-  // does — measured: every insert flavor refuses a key repeated within
-  // the batch; plain INSERT/COPY refuse collisions with existing rows;
-  // UPDATE refuses an assignment that duplicates a key; NULL keys
-  // refuse. Accepting the constraint WITHOUT the checks would be the
-  // silent-wrongness this file refuses elsewhere (the old rationale for
-  // rejecting PRIMARY KEY outright); with them, the shorthand routes.
-  // Known non-enforcing path: MERGE INTO — Spark-native surface DuckDB
-  // 1.x does not parse, so no migrating DuckDB script reaches it; its
-  // route documents the gap.
+  // key from the table's PRIMARY KEY, which DuckDB keeps in its catalog.
+  // Here too the key is catalog state: the routed column-list CREATE
+  // TABLE writes the declared key as ONE table property (`PkProperty`)
+  // in the same DDL that creates the table, so the key lives and dies
+  // with its table — ALTER TABLE … RENAME TO and CREATE OR REPLACE's
+  // swap-rename carry it, DROP TABLE removes it, a failed CREATE or an
+  // IF NOT EXISTS no-op leaves the surviving table's key alone, and
+  // db1.t / db2.t are distinct catalog entries. ALTER RENAME COLUMN
+  // rewrites the property; ALTER DROP COLUMN of a key column refuses (as
+  // DuckDB refuses dropping an indexed column). Every ROUTED write path
+  // ENFORCES the key (plain INSERT, COPY FROM, key-assigning UPDATE)
+  // exactly as DuckDB does — measured: every insert flavor refuses a key
+  // repeated within the batch; plain INSERT/COPY refuse collisions with
+  // existing rows; UPDATE refuses an assignment that duplicates a key;
+  // NULL keys refuse. Accepting the constraint WITHOUT the checks would
+  // be the silent wrongness this file refuses elsewhere. Known
+  // non-enforcing path: MERGE INTO — Spark-native surface DuckDB 1.x
+  // does not parse, so no migrating DuckDB script reaches it; its route
+  // documents the gap.
 
-  /** Per-session PRIMARY KEY registry (lowercase table name → key
-    * columns in the declared spelling). Weak keys: a closed session's
-    * entries vanish with it. Every routed CREATE of a name clears the
-    * old entry (the column-list route re-registers when it declares a
-    * key); DROP TABLE clears; ALTER RENAME COLUMN follows the rename;
-    * ALTER DROP COLUMN of a key column refuses (as DuckDB refuses
-    * dropping an indexed column). */
-  private[engine] val primaryKeyStore =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, Seq[String]]]()
-  private[engine] def primaryKeys(
-      spark: SparkSession): scala.collection.mutable.Map[String, Seq[String]] =
-    primaryKeyStore.synchronized {
-      primaryKeyStore.computeIfAbsent(spark,
-        _ => scala.collection.mutable.Map.empty)
-    }
+  /** Table property holding a declared PRIMARY KEY: the key columns, in
+    * declared spelling, as a JSON array (round-trips any column name). */
+  private[engine] val PkProperty = "graft.primary_key"
+  private val pkJson = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  /** Registry key for a table spelling: backquotes stripped, lowercased,
-    * and QUALIFIED with the resolved database — an unqualified spelling
-    * takes the session's current database (ADVICE r20: dropping the
-    * qualifier collapsed db1.t and db2.t into one entry, so a PK
-    * registered for one was enforced on — or retired by — the other
-    * whenever column names lined up). A qualified or quoted CREATE and
-    * a bare INSERT in the same database still meet in the SAME entry. */
-  private[engine] def pkName(spark: SparkSession, raw: String): String = {
-    val unq = raw.trim.stripPrefix("`").stripSuffix("`")
-    val (db, bare) =
-      if (unq.contains('.')) {
-        val i = unq.lastIndexOf('.')
-        (unq.substring(0, i), unq.substring(i + 1))
-      } else (spark.catalog.currentDatabase, unq)
-    s"${db.replace("`", "").toLowerCase}." +
-      bare.stripPrefix("`").stripSuffix("`").toLowerCase
+  /** `'graft.primary_key' = '<json>'` — the TBLPROPERTIES entry for
+    * `keys`, escaped for a Spark SQL string literal. */
+  private[engine] def pkTblProperty(keys: Seq[String]): String = {
+    val json = pkJson.writeValueAsString(keys.toArray)
+    s"'$PkProperty' = '${json.replace("\\", "\\\\").replace("'", "\\'")}'"
   }
 
   /** Resolve an INSERT target's written spelling to the identifier the
@@ -1172,55 +1157,21 @@ private[engine] trait EngineDml {
     else unq
   }
 
-  /** PER-NAME registration generation, bumped by every PK registration
-    * of that name (including a registry move on CREATE OR REPLACE's
-    * rename). The router's post-success retirement compares the TARGET
-    * name's generation across a statement's execution: unchanged means
-    * no route registered a key for that name, so a CREATE TABLE may
-    * retire the name's stale entry — changed means the statement itself
-    * just registered, and retiring would erase its own work. Per name,
-    * not a session-global counter (ADVICE r20): a concurrent PK
-    * registration of an UNRELATED name must not veto this statement's
-    * retirement — the global epoch let a phantom key survive a
-    * same-schema re-create raced by any other CREATE. */
-  private[engine] val pkGenStore =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, Long]]()
-  private def pkGens(
-      spark: SparkSession): scala.collection.concurrent.TrieMap[String, Long] =
-    pkGenStore.synchronized {
-      pkGenStore.computeIfAbsent(spark,
-        _ => scala.collection.concurrent.TrieMap.empty)
-    }
-  /** Current generation of `name` (0 = never registered). */
-  private[engine] def pkGenOf(spark: SparkSession, name: String): Long =
-    pkGens(spark).getOrElse(name, 0L)
-  /** Bump `name`'s generation — call under every registry write of the
-    * name (registration or move-in). */
-  private[engine] def bumpPkGen(spark: SparkSession, name: String): Unit = {
-    val gens = pkGens(spark)
-    gens.updateWith(name) { v => Some(v.getOrElse(0L) + 1L) }
-    ()
-  }
-
-  /** The registered key of `table`, validated against its CURRENT
-    * schema — a table re-created or renamed outside the routed paths
-    * drops its stale entry instead of enforcing a phantom constraint. */
+  /** The declared key of `table` — None for views, missing tables and
+    * keyless tables. The spelling (bare, backquoted, db-qualified)
+    * resolves with the catalog's own identifier parsing. */
   private[engine] def pkOf(
-      spark: SparkSession, table: String): Option[Seq[String]] = {
-    val store = primaryKeys(spark)
-    val ident = table.trim.stripPrefix("`").stripSuffix("`")
-    store.synchronized {
-      store.get(pkName(spark, table)).flatMap { keys =>
-        val ok = spark.catalog.tableExists(ident) && {
-          val fields = spark.table(ident).schema.fieldNames
-          keys.forall(k => fields.exists(_.equalsIgnoreCase(k)))
-        }
-        if (ok) Some(keys)
-        else { store.remove(pkName(spark, table)); None }
-      }
+      spark: SparkSession, table: String): Option[Seq[String]] =
+    try {
+      val meta = spark.sessionState.catalog.getTempViewOrPermanentTableMetadata(
+        spark.sessionState.sqlParser.parseTableIdentifier(table.trim))
+      meta.properties.get(PkProperty)
+        .filter(_ => meta.tableType != org.apache.spark.sql.catalyst
+          .catalog.CatalogTableType.VIEW)
+        .map(pkJson.readValue(_, classOf[Array[String]]).toSeq)
+    } catch {
+      case _: org.apache.spark.sql.AnalysisException => None
     }
-  }
 
   /** Refuse a key repeated WITHIN the written batch or a NULL in any
     * key column — both halves of the PRIMARY KEY contract DuckDB
@@ -1311,14 +1262,20 @@ private[engine] trait EngineDml {
     import org.apache.spark.sql.catalyst.expressions.aggregate.{
       AggregateExpression, AnyValue, Collect, First, Last, MaxMinBy, Mode}
     import org.apache.spark.sql.catalyst.plans.{logical => l}
-    val unstable = df.queryExecution.analyzed.exists(p =>
+    // subqueriesAll: a subquery's plan (`SELECT (SELECT k FROM u LIMIT
+    // 1) …`) is as unstable as the outer one when it holds these shapes
+    val plans = {
+      val root = df.queryExecution.analyzed
+      root +: root.subqueriesAll
+    }
+    val unstable = plans.exists(_.exists(p =>
       p.expressions.exists(e => e.exists {
         case x if !x.deterministic => true
         case _: CurrentTimestamp | _: CurrentDate | _: Now |
             _: LocalTimestamp => true
         case _ => false
-      }))
-    val orderUnstable = df.queryExecution.analyzed.exists {
+      })))
+    val orderUnstable = plans.exists(_.exists {
       case _: l.GlobalLimit | _: l.LocalLimit | _: l.Offset | _: l.Tail |
           _: l.Sample | _: l.Deduplicate | _: l.Window => true
       case a: l.Aggregate => a.aggregateExpressions.exists(_.exists {
@@ -1330,7 +1287,7 @@ private[engine] trait EngineDml {
         case _ => false
       })
       case _ => false
-    }
+    })
     if (unstable || orderUnstable) df.localCheckpoint(true) else df
   }
 
@@ -1488,7 +1445,7 @@ private[engine] trait EngineDml {
         s"$what must provide PRIMARY KEY column $k — an omitted key" +
           " would land NULL and violate the constraint (as in DuckDB)"))
 
-  /** Plain INSERT INTO a table with a registered PRIMARY KEY: bind the
+  /** Plain INSERT INTO a table with a declared PRIMARY KEY: bind the
     * source once (snapshotted only when unstable — see stableSnapshot),
     * enforce NULL / batch / table uniqueness, then append. PK-less
     * tables never reach this route — their inserts stay on Spark's
@@ -1517,7 +1474,7 @@ private[engine] trait EngineDml {
     val keys = pkOf(spark, table).getOrElse(
       throw new IllegalArgumentException(
         s"$verb INTO $table resolves its conflict key from the table's" +
-          " PRIMARY KEY, and this table has none registered — declare" +
+          " PRIMARY KEY, and this table declares none — declare" +
           " one in the routed CREATE TABLE (col TYPE PRIMARY KEY /" +
           " PRIMARY KEY (cols)), or name the key explicitly: INSERT ..." +
           " ON CONFLICT (keys) DO " +

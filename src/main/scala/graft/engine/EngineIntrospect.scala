@@ -22,15 +22,10 @@ private[engine] trait EngineIntrospect {
       "(IF\\s+NOT\\s+EXISTS\\s+)?(.+)$").r
 
   // same name alternatives as insertHeadRe: bare, backquoted, or
-  // dot-qualified — the PK registry lookup normalizes all three
+  // dot-qualified — the PRIMARY KEY lookup (pkOf) resolves all three
   private[engine] val insertOrRe =
     ("(?is)^INSERT\\s+OR\\s+(REPLACE|IGNORE)\\s+INTO\\s+" +
       "(`[^`]+`|[A-Za-z_][\\w.]*)\\s*(.+)$").r
-
-  /** Target name of a DROP TABLE — behind the PK-registry retirement
-    * in `sql`. */
-  private[engine] val dropTableNameRe =
-    "(?is)^DROP\\s+TABLE\\s+(?:IF\\s+EXISTS\\s+)?(`[^`]+`|[\\w.]+)".r
 
   /** Target name of any CREATE VIEW/TABLE statement — the one shared
     * extraction behind the auto-claim release in `sql`. */
@@ -38,16 +33,6 @@ private[engine] trait EngineIntrospect {
     ("(?is)^CREATE\\s+(?:OR\\s+REPLACE\\s+)?(?:GLOBAL\\s+)?" +
       "(?:TEMP(?:ORARY)?\\s+)?(?:EXTERNAL\\s+)?(?:VIEW|TABLE)\\s+" +
       "(?:IF\\s+NOT\\s+EXISTS\\s+)?(`[^`]+`|[\\w.]+)").r
-
-  /** CREATE TABLE only (never VIEW), with the IF NOT EXISTS marker
-    * captured — behind the PK-registry retirement in `sql`: a CREATE
-    * VIEW whose name matches a keyed table must NOT erase that table's
-    * constraint, and an IF NOT EXISTS no-op on an existing table must
-    * leave its registration untouched. */
-  private[engine] val ddlCreateTableNameRe =
-    ("(?is)^CREATE\\s+(?:OR\\s+REPLACE\\s+)?(?:GLOBAL\\s+)?" +
-      "(?:TEMP(?:ORARY)?\\s+)?(?:EXTERNAL\\s+)?TABLE\\s+" +
-      "(IF\\s+NOT\\s+EXISTS\\s+)?(`[^`]+`|[\\w.]+)").r
 
   // ALTER TABLE column surgery (r18): Spark's v1 session-catalog
   // parquet tables support ADD COLUMNS natively but reject DROP/RENAME
@@ -654,8 +639,9 @@ private[engine] trait EngineIntrospect {
     val spark = df.sparkSession
     import spark.implicits._
     // DuckDB's exact column set (r18 shape parity): key/default/extra
-    // are always NULL here — this engine keeps no constraint metadata —
-    // but a migrating user's tooling indexes the columns by name
+    // are always NULL here — a described DataFrame carries no table
+    // metadata (PRAGMA table_info reports a table's PRIMARY KEY) — but
+    // a migrating user's tooling indexes the columns by name
     df.schema.fields.toSeq
       .map(f => (f.name, f.dataType.sql,
         if (f.nullable) "YES" else "NO",
@@ -664,14 +650,16 @@ private[engine] trait EngineIntrospect {
   }
 
   /** DuckDB's `PRAGMA table_info` output shape (cid, name, type,
-    * notnull, dflt_value, pk): notnull is real schema metadata;
-    * dflt_value and pk are always NULL/false — this engine keeps no
-    * constraint metadata. Pure driver-side metadata, no job. */
-  private[engine] def tableInfo(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
+    * notnull, dflt_value, pk): notnull is the schema's nullability, and
+    * a PRIMARY KEY column (the table's key property) reports pk = true
+    * and notnull = true, as in DuckDB; dflt_value is always NULL. Pure
+    * driver-side metadata, no job. */
+  private[engine] def tableInfo(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
-    df.schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
-      (i, f.name, f.dataType.sql, !f.nullable, Option.empty[String], false)
+    val keys = pkOf(spark, table).getOrElse(Nil)
+    spark.table(table).schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+      val pk = keys.exists(_.equalsIgnoreCase(f.name))
+      (i, f.name, f.dataType.sql, pk || !f.nullable, Option.empty[String], pk)
     }.toDF("cid", "name", "type", "notnull", "dflt_value", "pk")
   }
 

@@ -748,12 +748,15 @@ object Dedup {
         .select(col("d1"), col("d2"), lit(0L).as("t"), lit(1L).as("c")))
       .groupBy(col("d1"), col("d2"))
       .agg(max(col("t")).as("t"), max(col("c")).as("c"))
-    flags.agg(sum(col("t")).as("n_truth"), sum(col("c")).as("n_cand"),
-        sum(col("t") * col("c")).as("n_hits"))
+    // over an empty corpus the counts are 0 (a bare sum is NULL) and
+    // the ratios NULL (try_divide: DuckDB's x / 0 is NULL too)
+    flags.agg(coalesce(sum(col("t")), lit(0L)).as("n_truth"),
+        coalesce(sum(col("c")), lit(0L)).as("n_cand"),
+        coalesce(sum(col("t") * col("c")), lit(0L)).as("n_hits"))
       .select(col("n_truth"), col("n_cand"), col("n_hits"),
-        (col("n_hits").cast("double") / col("n_truth").cast("double"))
+        try_divide(col("n_hits").cast("double"), col("n_truth").cast("double"))
           .as("recall"),
-        (col("n_hits").cast("double") / col("n_cand").cast("double"))
+        try_divide(col("n_hits").cast("double"), col("n_cand").cast("double"))
           .as("precision"))
   }
 
@@ -822,10 +825,13 @@ object Dedup {
         .select(col("qid"), col("doc_id"), lit(0L).as("t"), lit(1L).as("c")))
       .groupBy(col("qid"), col("doc_id"))
       .agg(max(col("t")).as("t"), max(col("c")).as("c"))
-    flags.agg(sum(col("t")).as("n_truth"), sum(col("c")).as("n_cand"),
-        sum(col("t") * col("c")).as("n_hits"))
+    // over an empty corpus the counts are 0 (a bare sum is NULL) and
+    // the ratios NULL (try_divide: DuckDB's x / 0 is NULL too)
+    flags.agg(coalesce(sum(col("t")), lit(0L)).as("n_truth"),
+        coalesce(sum(col("c")), lit(0L)).as("n_cand"),
+        coalesce(sum(col("t") * col("c")), lit(0L)).as("n_hits"))
       .select(col("n_truth"), col("n_cand"), col("n_hits"),
-        (col("n_hits").cast("double") / col("n_truth").cast("double"))
+        try_divide(col("n_hits").cast("double"), col("n_truth").cast("double"))
           .as("recall"))
   }
 

@@ -1640,6 +1640,24 @@ class EngineSpec extends AnyFunSuite {
     } finally Engine.exec(spark, s"DROP TABLE IF EXISTS $t")
   }
 
+  test("RETURNING on a subquery source returns the row that landed") {
+    // the scalar subquery reads the target: re-evaluated after the
+    // append it would yield max(k)+1 of the NEW table, a row that never
+    // landed — the source must be pinned before the write
+    val t = s"engine_spec_retsq_p${ProcessHandle.current.pid}"
+    Engine.exec(spark, s"DROP TABLE IF EXISTS $t")
+    Engine.exec(spark, s"CREATE TABLE $t (k BIGINT, v STRING)")
+    try {
+      Engine.exec(spark, s"INSERT INTO $t VALUES (1, 'a'), (2, 'b')")
+      val ret = Engine.sql(spark,
+        s"INSERT INTO $t SELECT (SELECT max(k) + 1 FROM $t), 'x' RETURNING *")
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+      assert(ret == Seq((3L, "x")))
+      assert(spark.table(t).collect().map(r => (r.getLong(0), r.getString(1)))
+        .sorted.toSeq == Seq((1L, "a"), (2L, "b"), (3L, "x")))
+    } finally Engine.exec(spark, s"DROP TABLE IF EXISTS $t")
+  }
+
   test("GLOB rewrites to an anchored case-sensitive RLIKE") {
     assert(Engine.globToRegex("a*b?c") == "a.*b.c")
     assert(Engine.globToRegex("x[0-9]y[!ab]") == "x[0-9]y[^ab]")
@@ -1942,7 +1960,7 @@ class EngineSpec extends AnyFunSuite {
     assert(sch.fields.map(_.dataType.sql).toSeq ==
       Seq("INT", "STRING", "TIMESTAMP", "ARRAY<INT>", "DOUBLE"))
     Engine.exec(spark, "DROP TABLE IF EXISTS engine_ct")
-    // PRIMARY KEY is ACCEPTED since round 19 (registered + enforced —
+    // PRIMARY KEY is ACCEPTED (stored as a table property + enforced —
     // see the dedicated PK tests); the unenforced constraints refuse
     assert(intercept[IllegalArgumentException](Engine.sql(spark,
       "CREATE TABLE pk2 (a INTEGER, b TEXT UNIQUE)")).getMessage
@@ -1958,6 +1976,11 @@ class EngineSpec extends AnyFunSuite {
         |CREATE TABLE engine_pk (k BIGINT PRIMARY KEY, v TEXT);
         |INSERT INTO engine_pk VALUES (1, 'a'), (2, 'b');"""
         .stripMargin)
+    // PRAGMA table_info reports the key as DuckDB 1.0 does: pk = true
+    // and notnull = true on the key column only
+    assert(Engine.sql(spark, "PRAGMA table_info('engine_pk')").collect()
+      .map(r => (r.getString(1), r.getBoolean(3), r.getBoolean(5))).toSeq ==
+      Seq(("k", true, true), ("v", false, false)))
     // plain INSERT: existing-key, in-batch-dup, and NULL-key refusals
     // (all measured DuckDB behaviors), each BEFORE any write
     assert(intercept[Exception](Engine.sql(spark,
@@ -1972,7 +1995,7 @@ class EngineSpec extends AnyFunSuite {
     assert(Engine.sql(spark,
       "SELECT count(*) FROM engine_pk").head().getLong(0) == 2,
       "a refused statement must land nothing")
-    // OR REPLACE upserts on the registered key; OR IGNORE drops
+    // OR REPLACE upserts on the declared key; OR IGNORE drops
     // conflicting incoming rows; both refuse in-batch duplicates
     Engine.sql(spark,
       "INSERT OR REPLACE INTO engine_pk VALUES (1, 'A'), (3, 'c')")
@@ -2000,7 +2023,7 @@ class EngineSpec extends AnyFunSuite {
     assert(intercept[Exception](Engine.sql(spark,
       "INSERT INTO engine_pk VALUES (1, 'dup')")).getMessage
       .contains("PRIMARY KEY"), "the registry follows the rename")
-    // re-creating the table WITHOUT a key retires the registry entry:
+    // re-creating the table WITHOUT a key drops the key with the table:
     // the duplicate now lands (Spark-native path, no phantom constraint)
     Engine.runScript(spark,
       """DROP TABLE IF EXISTS engine_pk;
@@ -2085,6 +2108,58 @@ class EngineSpec extends AnyFunSuite {
       "SELECT count(*) FROM engine_pk3").head().getLong(0) == 2,
       "a keyless replacement must stop enforcing")
     Engine.exec(spark, "DROP TABLE IF EXISTS engine_pk3")
+    // ALTER TABLE … RENAME TO keeps the key with the table (DuckDB 1.0
+    // refuses the duplicate: "PRIMARY KEY or UNIQUE constraint violated")
+    Engine.runScript(spark,
+      """DROP TABLE IF EXISTS engine_pk4;
+        |DROP TABLE IF EXISTS engine_pk4r;
+        |CREATE TABLE engine_pk4 (k BIGINT PRIMARY KEY, v TEXT);
+        |INSERT INTO engine_pk4 VALUES (1, 'a');
+        |ALTER TABLE engine_pk4 RENAME TO engine_pk4r;""".stripMargin)
+    assert(intercept[Exception](Engine.sql(spark,
+      "INSERT INTO engine_pk4r VALUES (1, 'dup')")).getMessage
+      .contains("PRIMARY KEY"), "the key must follow RENAME TO")
+    assert(Engine.sql(spark,
+      "SELECT count(*) FROM engine_pk4r").head().getLong(0) == 1)
+    Engine.exec(spark, "DROP TABLE IF EXISTS engine_pk4r")
+    // the key property round-trips a name that needs JSON and SQL
+    // escaping (a double quote and a backslash)
+    Engine.exec(spark, "DROP TABLE IF EXISTS engine_pk5")
+    Engine.exec(spark,
+      "CREATE TABLE engine_pk5 (`k\"\\x` BIGINT PRIMARY KEY, v TEXT)")
+    Engine.exec(spark, "INSERT INTO engine_pk5 VALUES (1, 'a')")
+    assert(Engine.sql(spark, "PRAGMA table_info('engine_pk5')").collect()
+      .map(r => (r.getString(1), r.getBoolean(5))).toSeq ==
+      Seq(("k\"\\x", true), ("v", false)))
+    assert(intercept[Exception](Engine.sql(spark,
+      "INSERT INTO engine_pk5 VALUES (1, 'dup')")).getMessage
+      .contains("PRIMARY KEY"))
+    Engine.exec(spark, "DROP TABLE IF EXISTS engine_pk5")
+    // db1.t and db2.t are different tables with different keys: each
+    // enforces its own key and never the other's
+    Engine.runScript(spark,
+      """CREATE DATABASE IF NOT EXISTS engine_pk_db1;
+        |CREATE DATABASE IF NOT EXISTS engine_pk_db2;
+        |DROP TABLE IF EXISTS engine_pk_db1.t;
+        |DROP TABLE IF EXISTS engine_pk_db2.t;
+        |CREATE TABLE engine_pk_db1.t (a BIGINT PRIMARY KEY, b BIGINT);
+        |CREATE TABLE engine_pk_db2.t (a BIGINT, b BIGINT PRIMARY KEY);
+        |INSERT INTO engine_pk_db1.t VALUES (1, 1);
+        |INSERT INTO engine_pk_db2.t VALUES (1, 1);""".stripMargin)
+    try {
+      assert(intercept[Exception](Engine.sql(spark,
+        "INSERT INTO engine_pk_db1.t VALUES (1, 2)")).getMessage
+        .contains("PRIMARY KEY"), "db1.t enforces its key a")
+      Engine.sql(spark, "INSERT INTO engine_pk_db2.t VALUES (1, 2)")
+      Engine.sql(spark, "INSERT INTO engine_pk_db1.t VALUES (2, 1)")
+      assert(intercept[Exception](Engine.sql(spark,
+        "INSERT INTO engine_pk_db2.t VALUES (2, 1)")).getMessage
+        .contains("PRIMARY KEY"), "db2.t enforces its key b")
+      assert(Seq("engine_pk_db1.t", "engine_pk_db2.t").map(t => Engine.sql(
+        spark, s"SELECT count(*) FROM $t").head().getLong(0)) == Seq(2L, 2L))
+    } finally Engine.runScript(spark,
+      """DROP DATABASE IF EXISTS engine_pk_db1 CASCADE;
+        |DROP DATABASE IF EXISTS engine_pk_db2 CASCADE;""".stripMargin)
   }
 
   test("MATERIALIZED CTE hints strip; ARRAY[...] constructs") {

@@ -86,4 +86,22 @@ class PkFusedCheckSpec extends AnyFunSuite {
     assert(pinned(base.groupBy("v")
       .agg(org.apache.spark.sql.functions.first("k").as("k"))))
   }
+
+  test("stableSnapshot looks inside subqueries") {
+    import spark.implicits._
+    Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+      .createOrReplaceTempView("pk_snap_u")
+    def pinned(df: org.apache.spark.sql.DataFrame): Boolean =
+      !(Engine.stableSnapshot(df) eq df)
+    // LIMIT without a total order inside a scalar subquery: each
+    // evaluation may pick a different k
+    assert(pinned(spark.sql(
+      "SELECT (SELECT k FROM pk_snap_u LIMIT 1) AS k, 'x' AS v")))
+    // current time inside an IN-subquery
+    assert(pinned(spark.sql("SELECT k FROM pk_snap_u WHERE k IN" +
+      " (SELECT k FROM pk_snap_u WHERE current_timestamp() IS NOT NULL)")))
+    // a stable subquery stays unpinned
+    val stable = spark.sql("SELECT (SELECT max(k) FROM pk_snap_u) AS k")
+    assert(Engine.stableSnapshot(stable) eq stable)
+  }
 }

@@ -78,6 +78,18 @@ class RecallSpec extends AnyFunSuite {
       s"cap recall degenerated to zero — banding path broken: $r")
   }
 
+  test("minhash/simhash recall count 0/0/0 on an empty corpus") {
+    // both harnesses read only `documents`; an empty copy of it must
+    // yield zero counts, not the NULLs a bare sum gives over no rows
+    val empty = java.nio.file.Files.createTempDirectory("recall-empty")
+    spark.read.parquet(s"$dir/documents.parquet").limit(0)
+      .write.parquet(s"$empty/documents.parquet")
+    for (q <- Seq(Dedup.minhashRecall, Dedup.simhashRecall)) {
+      val r = q(spark, empty.toString).collect().head
+      assert((0 to 2).map(r.getLong) == Seq(0L, 0L, 0L), r.toString)
+    }
+  }
+
   test("clustered corpus: recall >= 0.8 at candidate fraction <= 25%") {
     // VERDICT r10 #1 — the scale-economics demonstration. On the raw
     // near-uniform corpus, high recall necessarily costs a high scan
