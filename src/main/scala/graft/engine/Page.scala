@@ -26,9 +26,11 @@ object Page {
   }
 
   private val NumericPattern = "^-?\\d+(\\.\\d+)?$".r
+  private val TokenPattern = "\\d+|\\D+".r
 
   // 'base' sensitivity ≈ PRIMARY strength (case- and accent-insensitive).
-  private def collator: Collator = {
+  // RuleBasedCollator.compare is synchronized, so one instance is shared.
+  private val collator: Collator = {
     val c = Collator.getInstance(Locale.ROOT)
     c.setStrength(Collator.PRIMARY)
     c
@@ -47,25 +49,59 @@ object Page {
       .toOption
   }
 
+  /** Everything `compareCells` derives from one cell, each part computed
+    * at most once, so a sort parses every cell once instead of once per
+    * comparison. */
+  private final class CellKey(raw: String) {
+    val text: String = Option(raw).fold("")(_.trim)
+    lazy val numeric: Option[BigDecimal] =
+      if (NumericPattern.matches(text)) Some(BigDecimal(text)) else None
+    /** Epoch millis when the cell carries a date hint and parses. */
+    lazy val epoch: Option[Long] =
+      if (text.contains('-') || text.contains('T') || text.contains(':'))
+        parseEpoch(text)
+      else None
+    /** Digit and text runs, each with its value when all its characters
+      * are digits (`\d` is ASCII-only, so a run of other digits is a
+      * text run that may still carry a value). */
+    lazy val tokens: Vector[(String, Option[BigInt])] =
+      TokenPattern.findAllIn(text).map { t =>
+        (t, if (t.forall(_.isDigit)) Some(BigInt(t)) else None)
+      }.toVector
+  }
+
   /** localeCompare(numeric:true) analog: digit runs compare numerically,
     * text runs through a PRIMARY-strength collator. */
-  private def alnumCompare(a: String, b: String): Int = {
-    val coll = collator
-    def tokens(s: String): Vector[String] =
-      "\\d+|\\D+".r.findAllIn(s).toVector
-    val (ta, tb) = (tokens(a), tokens(b))
-    ta.zip(tb).foreach { case (x, y) =>
-      val bothNum = x.head.isDigit && y.head.isDigit
-      val c =
-        if (bothNum) BigInt(x).compare(BigInt(y))
-        else coll.compare(x, y)
-      if (c != 0) return c
+  private def alnumCompare(a: CellKey, b: CellKey): Int = {
+    a.tokens.zip(b.tokens).foreach {
+      case ((_, Some(x)), (_, Some(y))) =>
+        val c = x.compare(y)
+        if (c != 0) return c
+      case ((x, _), (y, _)) =>
+        val c = collator.compare(x, y)
+        if (c != 0) return c
     }
-    ta.length - tb.length match {
-      case 0 => coll.compare(a, b) // tie-break full strings for stability
+    a.tokens.length - b.tokens.length match {
+      case 0 => collator.compare(a.text, b.text) // tie-break full strings for stability
       case d => d
     }
   }
+
+  private def compareKeys(a: CellKey, b: CellKey): Int =
+    (a.text.isEmpty, b.text.isEmpty) match {
+      case (true, true) => 0
+      case (true, false) => 1
+      case (false, true) => -1
+      case _ =>
+        (a.numeric, b.numeric) match {
+          case (Some(x), Some(y)) => x.compare(y)
+          case _ =>
+            (a.epoch, b.epoch) match {
+              case (Some(x), Some(y)) => java.lang.Long.compare(x, y)
+              case _ => alnumCompare(a, b)
+            }
+        }
+    }
 
   /** A18 comparator (`src/App.tsx:456-480`): empties sort after non-empty
     * values (in ascending orientation), numeric compare when both look
@@ -76,41 +112,17 @@ object Page {
     * come first. (SURVEY §2's "empty always last regardless of direction"
     * paraphrase is wrong about the reference code; the code is ground
     * truth.) */
-  def compareCells(aRaw: String, bRaw: String): Int = {
-    val a = Option(aRaw).fold("")(_.trim)
-    val b = Option(bRaw).fold("")(_.trim)
-    (a.isEmpty, b.isEmpty) match {
-      case (true, true) => 0
-      case (true, false) => 1
-      case (false, true) => -1
-      case _ =>
-        val numeric =
-          if (NumericPattern.matches(a) && NumericPattern.matches(b))
-            Some(BigDecimal(a).compare(BigDecimal(b)))
-          else None
-        numeric.getOrElse {
-          def hint(s: String) =
-            s.contains('-') || s.contains('T') || s.contains(':')
-          val byDate =
-            if (hint(a) && hint(b))
-              for (ae <- parseEpoch(a); be <- parseEpoch(b))
-                yield java.lang.Long.compare(ae, be)
-            else None
-          byDate.getOrElse(alnumCompare(a, b))
-        }
-    }
-  }
+  def compareCells(aRaw: String, bRaw: String): Int =
+    compareKeys(new CellKey(aRaw), new CellKey(bRaw))
 
-  /** A18: per-column toggle sort, stable via original row index
-    * (`src/App.tsx:492-502`). */
+  /** A18: per-column toggle sort, stable (`src/App.tsx:492-502`): rows
+    * that compare equal keep their page order. Each row's key is built once
+    * before sorting. */
   def sortRows(table: DisplayTable, col: Int, ascending: Boolean): DisplayTable = {
     val dir = if (ascending) 1 else -1
-    val indexed = table.rows.zipWithIndex
-    val sorted = indexed.sortWith { case ((ra, ia), (rb, ib)) =>
-      val cmp = compareCells(
-        ra.lift(col).getOrElse(""), rb.lift(col).getOrElse("")) * dir
-      if (cmp != 0) cmp < 0 else ia < ib
-    }
+    val keyed = table.rows.map(r => (r, new CellKey(r.lift(col).getOrElse(""))))
+    // sortWith is stable, so equal keys keep their original order
+    val sorted = keyed.sortWith((x, y) => compareKeys(x._2, y._2) * dir < 0)
     table.copy(rows = sorted.map(_._1))
   }
 }

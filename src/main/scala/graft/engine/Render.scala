@@ -45,6 +45,9 @@ object Render {
     case i: Instant => iso(i)
     case d: java.lang.Double => jsNumber(d.doubleValue)
     case f: java.lang.Float => jsNumber(f.doubleValue)
+    // java.math.BigDecimal.toString switches to exponent form below an
+    // adjusted exponent of -6 (DECIMAL(18,8) zero prints `0E-8`)
+    case d: java.math.BigDecimal => d.toPlainString
     case b: Array[Byte] => json(b)
     case s: collection.Seq[_] => json(s)
     case m: collection.Map[_, _] => json(m)
@@ -137,18 +140,25 @@ object Render {
       if (d.isNaN || d.isInfinite) "null" else jsNumber(d.doubleValue)
     case f: java.lang.Float =>
       if (f.isNaN || f.isInfinite) "null" else jsNumber(f.doubleValue)
+    case d: java.math.BigDecimal => d.toPlainString
     case n: (java.lang.Number) => n.toString
     case b: java.lang.Boolean => b.toString
     case other => json(other.toString)
   }
 
   /** A13: at most `limit` rendered rows + the true total (`src/arrow.ts:
-    * 28-45`, `src/App.tsx:435-439`). One extra count job — same contract as
-    * the reference, which materializes the full Arrow table but shows 200. */
+    * 28-45`, `src/App.tsx:435-439`; the reference materializes the full
+    * Arrow table but shows 200). Collects `limit + 1` rows in one Spark
+    * execution: when at most `limit` come back they are the whole result
+    * and their number is the total. Only an overflowing page runs a second
+    * execution, `df.count()`, for the total. */
   def tableToRows(df: DataFrame, limit: Int = DisplayLimit): DisplayTable = {
-    val total = df.count()
-    val rows = df.limit(limit).collect().toSeq
-      .map(r => r.toSeq.map(formatCell))
+    require(limit >= 0 && limit < Int.MaxValue,
+      s"display limit must be in [0, ${Int.MaxValue}), got $limit")
+    val fetched = df.limit(limit + 1).collect()
+    val total =
+      if (fetched.length <= limit) fetched.length.toLong else df.count()
+    val rows = fetched.take(limit).toSeq.map(r => r.toSeq.map(formatCell))
     DisplayTable(df.columns.toSeq, rows, total)
   }
 

@@ -33,4 +33,31 @@ object PageProps extends Properties("Page") {
       val sorted = cells.sortWith((a, b) => Page.compareCells(a, b) < 0)
       sorted.length == cells.length
     }
+
+  // Few distinct sort keys, so that ties are common.
+  private val tieCell: Gen[String] = Gen.oneOf(
+    "", " ", "10", "10.0", "9", "2024-01-02", "2024-01-02T00:00:00",
+    "abc", "ABC", "file9", "file10")
+
+  private def table(cells: List[String]) = Render.DisplayTable(
+    Seq("v", "i"), cells.zipWithIndex.map { case (c, i) => Seq(c, i.toString) },
+    cells.size.toLong)
+
+  property("sortRows is the stable sort by compareCells, both directions") =
+    Prop.forAll(Gen.listOf(Gen.oneOf(cell, tieCell)), Gen.oneOf(true, false)) {
+      (cells, ascending) =>
+        val t = table(cells)
+        val dir = if (ascending) 1 else -1
+        Page.sortRows(t, 0, ascending).rows == t.rows.sortWith(
+          (a, b) => Page.compareCells(a(0), b(0)) * dir < 0)
+    }
+
+  property("sortRows keeps page order among equal cells") =
+    Prop.forAll(Gen.listOf(tieCell), Gen.oneOf(true, false)) {
+      (cells, ascending) =>
+        val sorted = Page.sortRows(table(cells), 0, ascending).rows
+        sorted.zip(sorted.drop(1)).forall { case (a, b) =>
+          Page.compareCells(a(0), b(0)) != 0 || a(1).toInt < b(1).toInt
+        }
+    }
 }

@@ -58,4 +58,12 @@ class PageSpec extends AnyFunSuite {
     assert(desc.rows == Seq(
       Seq("", "z"), Seq("10", "x"), Seq("10", "w"), Seq("9", "Y")))
   }
+
+  test("A18: a text run that starts with a non-ASCII digit compares as text") {
+    // "٣abc" is one \D+ run whose first character is a digit (U+0663)
+    assert(Page.compareCells("٣abc", "٣abd") < 0)
+    assert(Page.compareCells("٣abc", "7") == -Page.compareCells("7", "٣abc"))
+    // a run made only of such digits still compares by value: ١٠ (10) > ٩ (9)
+    assert(Page.compareCells("١٠", "٩") > 0)
+  }
 }

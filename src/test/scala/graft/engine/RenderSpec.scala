@@ -1,7 +1,12 @@
 package graft.engine
 
 import java.time.LocalDate
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** A14 cell formatter against the type table in SURVEY §1.2
@@ -69,5 +74,71 @@ class RenderSpec extends AnyFunSuite {
     assert(page.rows.head == Seq("0"))
     assert(Render.infoLine(page) ==
       "Linhas: 500 (mostrando 200) · Colunas: 1")
+  }
+
+  test("A14: decimals render plainly, never in exponent form") {
+    assert(Render.formatCell(new java.math.BigDecimal("0E-8")) == "0.00000000")
+    assert(Render.formatCell(Seq(new java.math.BigDecimal("1.0E-7"))) ==
+      "[0.00000010]")
+    val df = graft.TestSpark.spark.sql(
+      "SELECT CAST(0 AS DECIMAL(18,8)) AS z, " +
+        "CAST(0.0000001 AS DECIMAL(18,8)) AS t")
+    assert(Render.tableToRows(df).rows == Seq(Seq("0.00000000", "0.00000010")))
+  }
+
+  // Its own session, so that the listener sees only this suite's queries.
+  private lazy val counted = {
+    val s = graft.TestSpark.spark.newSession()
+    val executions = new AtomicInteger
+    s.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        executions.incrementAndGet()
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        executions.incrementAndGet()
+    })
+    (s, executions)
+  }
+
+  /** The page of `df` and the number of Spark executions it ran. */
+  private def pageWithExecutions(
+      df: DataFrame, limit: Int): (Render.DisplayTable, Int) = {
+    val (s, executions) = counted
+    ListenerBusDrain.drain(s.sparkContext)
+    executions.set(0)
+    val page = Render.tableToRows(df, limit)
+    ListenerBusDrain.drain(s.sparkContext)
+    (page, executions.get)
+  }
+
+  test("A13: a page that fits runs one execution, an overflow two") {
+    val s = counted._1
+    val limit = 5
+    for ((n, expectedExecutions) <- Seq(0 -> 1, limit -> 1, (limit + 1) -> 2)) {
+      val (page, ran) =
+        pageWithExecutions(s.range(n).toDF("id").orderBy("id"), limit)
+      assert(page.totalRows == n, s"n=$n")
+      assert(page.shown == math.min(n, limit), s"n=$n")
+      assert(page.rows.headOption == (if (n == 0) None else Some(Seq("0"))))
+      assert(ran == expectedExecutions, s"n=$n")
+    }
+  }
+
+  test("A13: a fitting page of a non-deterministic result counts its own rows") {
+    val df = counted._1.range(100).toDF("id").where("rand() < 0.5")
+    val (page, ran) = pageWithExecutions(df, Render.DisplayLimit)
+    assert(page.totalRows == page.shown)
+    assert(ran == 1)
+  }
+
+  test("A13: the display limit must leave room for the look-ahead row") {
+    val df = graft.TestSpark.spark.range(3).toDF("id")
+    for (bad <- Seq(-1, Int.MaxValue)) {
+      val e = intercept[IllegalArgumentException](Render.tableToRows(df, bad))
+      assert(e.getMessage.contains(
+        s"display limit must be in [0, ${Int.MaxValue}), got $bad"))
+    }
+    val empty = Render.tableToRows(df, 0)
+    assert(empty.totalRows == 3 && empty.shown == 0)
+    assert(Render.tableToRows(df, Int.MaxValue - 1).shown == 3)
   }
 }
